@@ -331,8 +331,7 @@ object HashKernels {
     * `array_sort` over a distinct hash set by plan shape, so re-proving
     * sortedness per pair in the single hottest measured loop buys nothing.
     * Deliberately NOT registered in the SQL namespace (unsorted input would
-    * return a silently wrong Jaccard) — internal plans construct the
-    * [[JaccardSortedUnchecked]] expression directly via
+    * return a silently wrong Jaccard) — internal plans call it through
     * [[GraftColumns.jaccardSortedUnchecked]]; the SQL surface gets the
     * checked [[jaccardSorted]].
     *
@@ -543,8 +542,8 @@ object HashKernels {
     * the same precondition (engine-constructed sorted inputs), the same
     * copy-free `UnsafeArrayData` fast path, and the same reason to exist:
     * it runs once per candidate pair. NOT SQL-registered (unsorted input
-    * would return a silently wrong count); internal plans construct the
-    * expression via [[GraftColumns.intersectCountSorted]].
+    * would return a silently wrong count); internal plans call it through
+    * [[GraftColumns.intersectCountSorted]].
     */
   def intersectCountSorted(a: ArrayData, b: ArrayData): Long =
     if (a.isInstanceOf[UnsafeArrayData] && b.isInstanceOf[UnsafeArrayData]) {
@@ -834,7 +833,7 @@ object HashKernels {
   /** `CAST(conv(substring(md5(s), pos, len), 16, 10) AS BIGINT)` for static
     * 1-based `pos` and `len` with pos ≥ 1, len ≥ 1, pos + len − 1 ≤ 32 and
     * len ≤ 15 (value < 2^60 — exact in a long, exactly the regime every
-    * call site uses; the expression constructor validates). Hex chars are
+    * call site uses; the `md5_lane` row of [[Kernels]] checks it at plan time). Hex chars are
     * digest nibbles: char i (0-based) is the high nibble of digest byte
     * i/2 when i is even, the low nibble when odd.
     */

@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * HOF chains (`aggregate(filter(split(...)))`). Higher-order functions are
   * CodegenFallback — per-element interpreted evaluation with a boxed
   * single-char string per input character — which made the per-char digest
-  * the dominant per-row cost in the span/dedup family (the L2SqLong
-  * precedent, r21 optimization round). Each kernel computes the IDENTICAL
+  * the dominant per-row cost in the span/dedup family (the
+  * [[VectorOps.l2sqLong]] precedent). Each kernel computes the IDENTICAL
   * arithmetic (same fold, same mod, same guards) in one primitive JVM loop;
   * the DuckDB oracles are untouched and keep adjudicating the values.
   *

@@ -83,7 +83,7 @@ object VectorOps {
   /** Squared L2 distance between two equal-length DOUBLE vectors, summed
     * left-to-right — bit-identical to the HOF form
     * `aggregate(zip_with(a, b, (x, y) -> (x-y)*(x-y)), 0D, (acc, v) -> acc+v)`
-    * it replaces in the PQ Lloyd rounds (r21; the L2SqLong precedent).
+    * it replaces in the PQ Lloyd rounds (the [[l2sqLong]] precedent).
     */
   def l2sqDouble(a0: ArrayData, b0: ArrayData): Double = {
     val a = a0.toDoubleArray()

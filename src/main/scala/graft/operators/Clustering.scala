@@ -514,7 +514,7 @@ object Clustering {
     // committed-check (manifest already past gen-base ⇒ skip). The
     // report reads BOTH generations back through their artifacts: per
     // cluster n_old/n_batch/n_new + exact integer centroid drift
-    // (L2SqLong(old,new)). Oracle: retrain, re-assign the +20M batch,
+    // (l2sq_long(old,new)). Oracle: retrain, re-assign the +20M batch,
     // re-fold — artifact math equals recomputed math.
     Entry(
       "q204_kmeans_update",

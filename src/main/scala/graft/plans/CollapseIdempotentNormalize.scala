@@ -1,15 +1,19 @@
 package graft.plans
 
-import graft.functions.NormalizeText
+import graft.functions.Kernels
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Custom Catalyst optimizer rule — the `Rule[LogicalPlan]` tier of the
   * extension surface (injected by graft.functions.GraftExtensions beside the
-  * native expressions): collapse `normalize_text(normalize_text(x))` to one
-  * application.
+  * native kernels): collapse `normalize_text(normalize_text(x))` to one
+  * application. Injected optimizer rules run after `ReplaceExpressions`, so
+  * the rule matches the `StaticInvoke` of `TextKernels.normalizeText` that
+  * replaced the `normalize_text` call.
   *
-  * Why this rewrite is SOUND: NormalizeText is idempotent by construction —
+  * Why this rewrite is SOUND: normalize_text is idempotent by construction —
   * its output is already NFC-composed, ROOT-casefolded, and
   * whitespace-collapsed/trimmed, and each of those three passes is a
   * projection (applying it to its own output is the identity; pinned by a
@@ -24,12 +28,21 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * runs the full kernel (NFC + casefold + collapse) twice per row over the
   * corpus; this rule deletes the inner pass at plan time, which is exactly
   * the kind of cross-layer redundancy no single author sees in their own
-  * code. Applied bottom-up via transformAllExpressions, so triple-stacked
-  * calls collapse in one optimizer visit.
+  * code. The operator-optimization batch runs to a fixed point, so deeper
+  * stacks collapse to one call as well.
   */
 object CollapseIdempotentNormalize extends Rule[LogicalPlan] {
+  private val normalize = Kernels("normalize_text")
+
+  private def isNormalize(e: Expression): Boolean = e match {
+    case s: StaticInvoke =>
+      s.staticObject == normalize.obj && s.functionName == normalize.method
+    case _ => false
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case NormalizeText(inner @ NormalizeText(_)) => inner
+      case outer: StaticInvoke if isNormalize(outer) && isNormalize(outer.arguments.head) =>
+        outer.arguments.head
     }
 }

@@ -433,8 +433,12 @@ class DedupSimilaritySuite extends SparkTestBase {
       s"serve plan re-scans the corpus:\n$physical")
     // and no signature computation either — batch signatures were computed
     // batch-side before the checkpoint; corpus signatures live in the index
-    assert(!serve.queryExecution.optimizedPlan.toString.contains("minhash_sig"),
-      "serve plan recomputes MinHash signatures")
+    // (pinned by SQL name and by kernel method: the optimized plan shows
+    // static_invoke(graft.functions.HashKernels.minhashArray(...)), not the
+    // SQL name)
+    val optimized = serve.queryExecution.optimizedPlan.toString
+    assert(!optimized.contains("minhash_sig") && !optimized.contains("minhashArray"),
+      s"serve plan recomputes MinHash signatures:\n$optimized")
   }
 
   test("bandCandidatesCross equals the distinct two-sided band join") {

@@ -72,16 +72,18 @@ class MRRunnerSuite extends SparkTestBase {
 
   test("spec INI parse + validation mirrors the reference's checks") {
     val outDir = Files.createTempDirectory("mr_spec_out").toString
+    val input = Files.createTempFile("mr_spec_in", ".txt")
+    Files.writeString(input, "the quick brown fox\njumps over the lazy dog\n")
     val ini =
       s"""n_workers=2
         |worker_ipaddr_ports=localhost:5000,localhost:5001
-        |input_files=/root/reference/test/input/testdata_1.txt
+        |input_files=$input
         |output_dir=$outDir
         |n_output_files=4
         |map_kilobytes=500
         |user_id=cs6210""".stripMargin
     val spec = MRSpec.fromIni(ini)
-    assert(spec.nWorkers == 2 && spec.nOutputFiles == 4)
+    assert(spec.nWorkers == 2 && spec.nOutputFiles == 4 && spec.inputFiles == Seq(input.toString))
     assert(MRSpec.validate(spec).isEmpty)
 
     assert(MRSpec.validate(spec.copy(nWorkers = 3)).exists(_.contains("n_workers")))

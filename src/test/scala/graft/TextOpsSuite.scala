@@ -273,25 +273,23 @@ class TextOpsSuite extends SparkTestBase {
     // the end-to-end soundness check either way
     assert(once.toSeq == twice.toSeq, "normalize_text is not idempotent")
     // the optimized plan of the registered query carries exactly ONE
-    // NormalizeText — the injected rule deleted the inner defensive pass
-    val df = Registry.byName("q188_normalize_collapse").q(spark, sf)
-    val n = df.queryExecution.optimizedPlan.collect { case p =>
-      p.expressions.map(_.collect {
-        case e: graft.functions.NormalizeText => e
-      }.size).sum
-    }.sum
-    assert(n == 1, s"expected 1 NormalizeText after the collapse rule, found $n")
-    // and a triple stack collapses in the same single optimizer visit
-    // (over the parquet table — a LocalRelation input would be folded away
-    // whole by ConvertToLocalRelation before this count could see it)
-    val n3 = Tables.documents(spark, sf)
-      .selectExpr("normalize_text(normalize_text(normalize_text(text))) AS n")
-      .queryExecution.optimizedPlan.collect { case p =>
+    // normalizeText call (normalize_text is replaced by its StaticInvoke
+    // before the rule runs) — the injected rule deleted the inner pass
+    def normalizeCalls(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case p =>
         p.expressions.map(_.collect {
-          case e: graft.functions.NormalizeText => e
+          case e: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+              if e.functionName == "normalizeText" => e
         }.size).sum
       }.sum
-    assert(n3 == 1, s"triple stack left $n3 NormalizeText nodes")
+    val n = normalizeCalls(Registry.byName("q188_normalize_collapse").q(spark, sf))
+    assert(n == 1, s"expected 1 normalizeText call after the collapse rule, found $n")
+    // and a triple stack collapses to one call as well
+    // (over the parquet table — a LocalRelation input would be folded away
+    // whole by ConvertToLocalRelation before this count could see it)
+    val n3 = normalizeCalls(Tables.documents(spark, sf)
+      .selectExpr("normalize_text(normalize_text(normalize_text(text))) AS n"))
+    assert(n3 == 1, s"triple stack left $n3 normalizeText calls")
   }
 
   test("q194 classifier: scores equal an independent replay; one-exchange map pass") {
